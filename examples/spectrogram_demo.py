@@ -4,7 +4,7 @@ bounded-memory segmented pipeline.
 
 1. `welch_psd` finds the carriers of a synthetic 2-channel signal;
 2. `spectrogram_db` localizes an amplitude burst in time AND frequency;
-3. `preprocess(segmented=True)` runs the full reference pipeline without
+3. `preprocess(seg_len=...)` runs the full reference pipeline without
    ever holding a whole channel in one task, and its high-gamma trace
    matches the whole-channel run.
 """
@@ -61,7 +61,7 @@ def main():
               precision="double")
     whole = high_gamma_trace(preprocess(sig, RATE, **kw), 0.25, 250.0)
     segd = high_gamma_trace(
-        preprocess(sig, RATE, segmented=True, seg_len=4096, **kw),
+        preprocess(sig, RATE, seg_len=4096, **kw),
         0.25, 250.0)
     j = (whole.withColumnRenamed("amp", "a")
          .join(segd.withColumnRenamed("amp", "b"),

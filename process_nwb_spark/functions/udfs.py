@@ -5,8 +5,8 @@ These are the *sanctioned escape hatches* ranked by cost: built-in JVM
 expressions first (everything else in relational/), Arrow-vectorized
 pandas UDFs when numpy semantics are genuinely needed (~10-100x faster
 than row-at-a-time), plain `udf` only as a last-resort compatibility shim.
-The grouped-map carriers (applyInPandas/mapInPandas) live with their
-operators: operators/kernel_ops.py, operators/car.py, llm/multimodal.py.
+The grouped-map carriers live with their operators: mapInArrow/applyInArrow
+in operators/kernel_ops.py and operators/car.py, and llm/multimodal.py.
 """
 from __future__ import annotations
 

@@ -1,4 +1,5 @@
-"""Common average reference — pure Catalyst (no Python UDFs).
+"""Common average reference: a pure-Catalyst relational face plus the
+packed pipeline's Arrow kernel (`subtract_car_packed`).
 
 The reference's CAR (common_referencing.py:11-68) is a trimmed-mean
 aggregation across channels per timepoint followed by a broadcast subtract.
@@ -118,12 +119,12 @@ def subtract_car(df: DataFrame, mean_frac: float = 0.95,
 
 def subtract_car_packed(packed: DataFrame, mean_frac: float = 0.95,
                         precision: str = "single") -> DataFrame:
-    """X - CAR(X) on the *packed* layout: one `applyInPandas` group per
+    """X - CAR(X) on the *packed* layout: one `applyInArrow` group per
     series gathers its channels, the dense kernel (dsp.kernels.subtract_car,
     parity common_referencing.py:45-68) does the per-timepoint trimmed mean
     in numpy, and rows come back still packed.
 
-    This is the pipeline's physical fast path: the shuffle moves n_channels
+    This is the packed pipeline's CAR: the shuffle moves n_channels
     packed rows per series (arrays), not n_time*n_channels long rows — at
     32 ch x 10 s x 1.6 kHz that is 32 rows vs 512k. The relational
     formulation (car_column/car_df above) remains the queryable/oracled
@@ -133,28 +134,22 @@ def subtract_car_packed(packed: DataFrame, mean_frac: float = 0.95,
     recordings past executor memory, split series into bounded segments
     upstream (CAR is per-timepoint, so segmenting is exact — no pad overlap
     needed, unlike the FFT stages)."""
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from ..dsp import kernels as K
+    from .kernel_ops import PACKED_SCHEMA, _packed_batches, _stack_series
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.argsort(pdf["channel"].to_numpy())
-        pdf = pdf.iloc[order]
-        X = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in pdf["values"]], axis=1)
+    def fn(table: "pa.Table") -> "pa.Table":
+        sid, channels, X = _stack_series(table)
         out = np.asarray(K.subtract_car(X, mean_frac=mean_frac,
                                         precision=precision), dtype=np.float64)
-        return pd.DataFrame({
-            "series_id": pdf["series_id"].values,
-            "channel": pdf["channel"].values,
-            "values": [out[:, i] for i in range(out.shape[1])],
-        })
+        cols = [np.ascontiguousarray(out[:, i]) for i in range(out.shape[1])]
+        return pa.Table.from_batches(list(_packed_batches(
+            pa.array([sid] * len(cols), type=pa.string()),
+            pa.array(channels, type=pa.int32()), cols)))
 
-    return packed.groupBy("series_id").applyInPandas(
-        fn, "series_id STRING, channel INT, values ARRAY<DOUBLE>")
+    return packed.groupBy("series_id").applyInArrow(fn, PACKED_SCHEMA)
 
 
 def car_df(df: DataFrame, mean_frac: float = 0.95,

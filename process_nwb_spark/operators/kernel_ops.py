@@ -1,9 +1,12 @@
 """Spark operators wrapping the NumPy spectral kernels.
 
 All operate on the *packed* layout (one row per channel, full time axis in
-an ARRAY<DOUBLE>) via `mapInPandas` — a narrow transformation: after the
-single pack() shuffle, any chain of these runs pipelined inside one stage,
-one Arrow round-trip per operator (or one total with `fused_ops`).
+an ARRAY<DOUBLE>) via `mapInArrow` / `applyInArrow`: the array column
+crosses into Python as one flat float64 buffer + offsets and leaves the
+same way, with no pandas object boxing on either side. After the single
+pack() shuffle, any chain of per-channel kernels runs pipelined inside one
+stage, one Arrow round-trip per operator (or one total with
+`fused_ops_arrow`).
 
 Scale note (100 TB): parallelism = n_series x n_channels tasks; a channel's
 array must fit in one task (~1e8 float64 samples = 800 MB upper bound).
@@ -13,33 +16,12 @@ already use (see SURVEY.md §7 "whole-axis FFT vs partitioned data").
 """
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..dsp import kernels as K
 
 PACKED_SCHEMA = "series_id STRING, channel INT, values ARRAY<DOUBLE>"
-
-
-def _map_values(df: DataFrame, fn) -> DataFrame:
-    """Apply `fn(np.ndarray (n_time,)) -> np.ndarray` to each packed row."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = [np.asarray(fn(np.asarray(v, dtype=np.float64)), dtype=np.float64)
-                   for v in pdf["values"]]
-            yield pd.DataFrame({
-                "series_id": pdf["series_id"].values,
-                "channel": pdf["channel"].values,
-                "values": out,
-            })
-
-    return df.mapInPandas(run, PACKED_SCHEMA)
 
 
 def scale_packed(df: DataFrame, scaling: float) -> DataFrame:
@@ -48,35 +30,6 @@ def scale_packed(df: DataFrame, scaling: float) -> DataFrame:
 
     return df.withColumn(
         "values", F.transform("values", lambda v: v * F.lit(float(scaling))))
-
-
-def resample_op(df: DataFrame, new_freq: float, old_freq: float,
-                npad="fast", precision: str = "single") -> DataFrame:
-    """FFT rational resample of every channel. Parity: resample.py:105-153."""
-    return _map_values(
-        df, lambda x: K.resample(x, new_freq, old_freq, npad=npad,
-                                 precision=precision))
-
-
-def notch_op(df: DataFrame, rate: float, noise_hz: float = 60.0,
-             npad="fast", precision: str = "single") -> DataFrame:
-    """60 Hz + harmonics notch. Parity: linenoise_notch.py:55-92."""
-    return _map_values(
-        df, lambda x: K.apply_linenoise_notch(x, rate, noise_hz=noise_hz,
-                                              npad=npad, precision=precision))
-
-
-def fused_ops(df: DataFrame, *fns) -> DataFrame:
-    """Chain ndarray->ndarray kernels in ONE Python crossing (the Spark
-    analog of the reference's fused notch+CAR stage pipelines.py:114-173 —
-    here used for resample+notch, which are adjacent per-channel stages)."""
-
-    def chained(x):
-        for f in fns:
-            x = f(x)
-        return x
-
-    return _map_values(df, chained)
 
 
 def _list_col_to_numpy(col):
@@ -138,15 +91,33 @@ def _bounded_row_groups(arrays, cap=2 ** 30):
         lo = hi
 
 
-def _map_values_arrow(df: DataFrame, fn) -> DataFrame:
-    """Arrow-native twin of _map_values: same narrow per-row kernel map,
-    but via mapInArrow — the ARRAY<DOUBLE> column crosses as one flat
-    float64 buffer + offsets instead of a pandas object Series of boxed
-    per-row ndarrays, in both directions. Math-identical to _map_values
-    (same fn over the same float64 views; pinned near-bitwise in
-    tests/test_spark_operators.py — the FFT itself has ULP-level
-    run-to-run alignment jitter)."""
+def _packed_batches(series_id, channels, arrays):
+    """Packed rows -> bounded PACKED_SCHEMA record batches. `series_id`
+    and `channels` are Arrow arrays aligned with the float64 `arrays`."""
     import pyarrow as pa
+
+    for lo, hi in _bounded_row_groups(arrays):
+        yield pa.RecordBatch.from_arrays(
+            [series_id.slice(lo, hi - lo), channels.slice(lo, hi - lo),
+             _pack_list_array(arrays[lo:hi])],
+            ["series_id", "channel", "values"])
+
+
+def _stack_series(table):
+    """One series' packed group -> (series_id, channels, X): the series'
+    channels sorted by channel id and stacked as the columns of an
+    (n_time, n_channels) float64 block — the gather shared by every
+    per-series kernel (packed CAR, fused CAR->wavelet)."""
+    ch = table.column("channel").to_numpy(zero_copy_only=False)
+    order = np.argsort(ch)
+    flat, bounds = _list_col_to_numpy(table.column("values"))
+    X = np.stack([flat[bounds[i]:bounds[i + 1]] for i in order], axis=1)
+    return table.column("series_id")[0].as_py(), ch[order], X
+
+
+def _map_values_arrow(df: DataFrame, fn) -> DataFrame:
+    """Apply `fn(np.ndarray (n_time,)) -> np.ndarray` to each packed row,
+    a narrow mapInArrow pass over flat float64 views of the arrays."""
 
     def run(batches):
         for batch in batches:
@@ -159,19 +130,33 @@ def _map_values_arrow(df: DataFrame, fn) -> DataFrame:
                     for i in range(batch.num_rows)]
             # bounded groups: an upsampling fn can grow a batch's flattened
             # output past the int32 list-offset ceiling
-            for lo, hi in _bounded_row_groups(outs):
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(0).slice(lo, hi - lo),
-                     batch.column(1).slice(lo, hi - lo),
-                     _pack_list_array(outs[lo:hi])],
-                    ["series_id", "channel", "values"])
+            yield from _packed_batches(batch.column(0), batch.column(1),
+                                       outs)
 
     return df.select("series_id", "channel", "values").mapInArrow(
         run, PACKED_SCHEMA)
 
 
+def resample_op(df: DataFrame, new_freq: float, old_freq: float,
+                npad="fast", precision: str = "single") -> DataFrame:
+    """FFT rational resample of every channel. Parity: resample.py:105-153."""
+    return _map_values_arrow(
+        df, lambda x: K.resample(x, new_freq, old_freq, npad=npad,
+                                 precision=precision))
+
+
+def notch_op(df: DataFrame, rate: float, noise_hz: float = 60.0,
+             npad="fast", precision: str = "single") -> DataFrame:
+    """60 Hz + harmonics notch. Parity: linenoise_notch.py:55-92."""
+    return _map_values_arrow(
+        df, lambda x: K.apply_linenoise_notch(x, rate, noise_hz=noise_hz,
+                                              npad=npad, precision=precision))
+
+
 def fused_ops_arrow(df: DataFrame, *fns) -> DataFrame:
-    """Arrow-native twin of fused_ops: chained kernels, one crossing."""
+    """Chain ndarray->ndarray kernels in ONE Python crossing (the Spark
+    analog of the reference's fused notch+CAR stage pipelines.py:114-173 —
+    here used for resample+notch, which are adjacent per-channel stages)."""
 
     def chained(x):
         for f in fns:
@@ -185,25 +170,65 @@ WAVELET_SCHEMA = ("series_id STRING, channel INT, band INT, cf DOUBLE, "
                   "sd DOUBLE, amp ARRAY<DOUBLE>, phase ARRAY<DOUBLE>")
 
 
-def _wavelet_bands(x_col: np.ndarray, rate: float, filters: str,
-                   hg_only: bool, abs_only: bool,
-                   post_resample_rate: float | None, npad, precision: str):
-    """One channel -> (band, amp, phase) tuples: the single spelling of
-    the wavelet / abs / optional post-resample / optional phase sequence
-    shared by wavelet_op, car_wavelet_op and car_wavelet_arrow (which are
-    contractually pinned bitwise-equal — any change here changes all
-    three together instead of inviting drift). `x_col` is (n_time, 1)."""
-    Xh, _, _, _ = K.wavelet_transform(
-        x_col, rate, filters=filters, hg_only=hg_only, npad=npad,
-        precision=precision)
-    for b in range(Xh.shape[-1]):
-        amp = np.abs(Xh[:, 0, b])
-        if post_resample_rate is not None:
-            amp = K.resample(amp, post_resample_rate, rate,
-                             precision=precision)
-        phase = (None if abs_only
-                 else np.angle(Xh[:, 0, b]).astype(np.float64))
-        yield b, amp.astype(np.float64), phase
+def _wavelet_band_kernel(rate: float, filters: str, hg_only: bool,
+                         abs_only: bool, post_resample_rate: float | None,
+                         npad, precision: str):
+    """Check the wavelet arguments eagerly, at plan time, and return
+    `build(series_id, channels, X)`, which wavelet-decomposes each column
+    of the (n_time, n_channels) block X and yields WAVELET_SCHEMA record
+    batches, one row per (channel, band), in bounded row groups: the one
+    spelling of the wavelet / abs / optional post-resample / optional
+    phase sequence, shared by wavelet_op and car_wavelet_arrow.
+
+    Checking here rather than inside the executor kernel fails before the
+    distributed job is launched. Phase must not be resampled, as in the
+    reference (wavelet_transform.py:423-424)."""
+    if not abs_only and post_resample_rate is not None:
+        raise ValueError("Wavelet phase should not be resampled.")
+    import pyarrow as pa
+
+    from ..dsp.filterbank import band_params, check_nyquist
+
+    cfs, sds = band_params(filters, hg_only)
+    check_nyquist(np.asarray(cfs), rate)
+    cfs_l, sds_l = [float(c) for c in cfs], [float(s) for s in sds]
+    names = ["series_id", "channel", "band", "cf", "sd", "amp", "phase"]
+
+    def build(series_id, channels, X):
+        out_ch, bands, amps, phases = [], [], [], []
+        for i, ch in enumerate(channels):
+            Xh, _, _, _ = K.wavelet_transform(
+                X[:, i:i + 1], rate, filters=filters, hg_only=hg_only,
+                npad=npad, precision=precision)
+            for b in range(Xh.shape[-1]):
+                amp = np.abs(Xh[:, 0, b])
+                if post_resample_rate is not None:
+                    amp = K.resample(amp, post_resample_rate, rate,
+                                     precision=precision)
+                out_ch.append(int(ch))
+                bands.append(b)
+                amps.append(np.ascontiguousarray(amp, dtype=np.float64))
+                if not abs_only:
+                    phases.append(np.angle(Xh[:, 0, b]).astype(np.float64))
+        # bounded groups: a long series x many bands can exceed the int32
+        # list-offset ceiling even when every array is individually fine.
+        # phase, when present, is never resampled, so it is amp's length
+        for lo, hi in _bounded_row_groups(amps):
+            n = hi - lo
+            yield pa.RecordBatch.from_arrays([
+                pa.array([series_id] * n, type=pa.string()),
+                pa.array(out_ch[lo:hi], type=pa.int32()),
+                pa.array(bands[lo:hi], type=pa.int32()),
+                pa.array([cfs_l[b] for b in bands[lo:hi]],
+                         type=pa.float64()),
+                pa.array([sds_l[b] for b in bands[lo:hi]],
+                         type=pa.float64()),
+                _pack_list_array(amps[lo:hi]),
+                (pa.nulls(n, type=pa.list_(pa.float64())) if abs_only
+                 else _pack_list_array(phases[lo:hi])),
+            ], names)
+
+    return build
 
 
 def wavelet_op(df: DataFrame, rate: float, filters: str = "rat",
@@ -220,74 +245,20 @@ def wavelet_op(df: DataFrame, rate: float, filters: str = "rat",
     + resample is rejected as in the reference (wavelet_transform.py:423-424).
     Parity: wavelet_transform.py:238-322, 325-444.
     """
-    if not abs_only and post_resample_rate is not None:
-        raise ValueError("Wavelet phase should not be resampled.")
-    from ..dsp.filterbank import band_params, check_nyquist
+    build = _wavelet_band_kernel(rate, filters, hg_only, abs_only,
+                                 post_resample_rate, npad, precision)
 
-    cfs, sds = band_params(filters, hg_only)
-    check_nyquist(np.asarray(cfs), rate)
-    cfs_l, sds_l = [float(c) for c in cfs], [float(s) for s in sds]
+    def run(batches):
+        for batch in batches:
+            flat, bounds = _list_col_to_numpy(batch.column(2))
+            sids = batch.column(0).to_pylist()
+            chans = batch.column(1).to_pylist()
+            for i in range(batch.num_rows):
+                x = flat[bounds[i]:bounds[i + 1]]
+                yield from build(sids[i], [chans[i]], x[:, np.newaxis])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for sid, ch, vals in zip(pdf["series_id"], pdf["channel"],
-                                     pdf["values"]):
-                x = np.asarray(vals, dtype=np.float64)[:, np.newaxis]
-                rows = [(sid, ch, b, cfs_l[b], sds_l[b], amp, phase)
-                        for b, amp, phase in _wavelet_bands(
-                            x, rate, filters, hg_only, abs_only,
-                            post_resample_rate, npad, precision)]
-                yield pd.DataFrame(
-                    rows, columns=["series_id", "channel", "band", "cf",
-                                   "sd", "amp", "phase"])
-
-    return df.mapInPandas(run, WAVELET_SCHEMA)
-
-
-def car_wavelet_op(df: DataFrame, rate: float, mean_frac: float = 0.95,
-                   filters: str = "rat", hg_only: bool = True,
-                   abs_only: bool = True,
-                   post_resample_rate: float | None = None, npad="fast",
-                   precision: str = "single") -> DataFrame:
-    """Fused CAR -> wavelet in ONE Python crossing: the CAR gather already
-    holds a whole series' channel block in one task (the per-series
-    applyInPandas group), and the wavelet is per-channel — a strict subset
-    of that grouping — so running it inside the same kernel saves a full
-    Arrow round-trip of the CAR'd signal (2 x n_time x n_channels doubles)
-    plus one mapInPandas stage. Identical math to subtract_car_packed
-    followed by wavelet_op (same K.* calls in the same order); the
-    unfused pair remains for `all_steps` lineage materialization.
-    Parity: the reference's own fused store_linenoise_notch_CAR stage
-    (pipelines.py:114-173) applied one stage later.
-    """
-    if not abs_only and post_resample_rate is not None:
-        raise ValueError("Wavelet phase should not be resampled.")
-    from ..dsp.filterbank import band_params, check_nyquist
-
-    cfs, sds = band_params(filters, hg_only)
-    check_nyquist(np.asarray(cfs), rate)
-    cfs_l, sds_l = [float(c) for c in cfs], [float(s) for s in sds]
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.argsort(pdf["channel"].to_numpy())
-        pdf = pdf.iloc[order]
-        X = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in pdf["values"]], axis=1)
-        Xc = np.asarray(K.subtract_car(X, mean_frac=mean_frac,
-                                       precision=precision),
-                        dtype=np.float64)
-        rows = []
-        for i, (sid, ch) in enumerate(zip(pdf["series_id"], pdf["channel"])):
-            rows.extend(
-                (sid, ch, b, cfs_l[b], sds_l[b], amp, phase)
-                for b, amp, phase in _wavelet_bands(
-                    Xc[:, i:i + 1], rate, filters, hg_only, abs_only,
-                    post_resample_rate, npad, precision))
-        return pd.DataFrame(
-            rows, columns=["series_id", "channel", "band", "cf", "sd",
-                           "amp", "phase"])
-
-    return df.groupBy("series_id").applyInPandas(fn, WAVELET_SCHEMA)
+    return df.select("series_id", "channel", "values").mapInArrow(
+        run, WAVELET_SCHEMA)
 
 
 def car_wavelet_arrow(df: DataFrame, rate: float, mean_frac: float = 0.95,
@@ -295,62 +266,24 @@ def car_wavelet_arrow(df: DataFrame, rate: float, mean_frac: float = 0.95,
                       abs_only: bool = True,
                       post_resample_rate: float | None = None, npad="fast",
                       precision: str = "single") -> DataFrame:
-    """Arrow-native twin of car_wavelet_op (applyInArrow): the series'
-    channel block arrives as one flat float64 buffer + offsets and the
-    band amplitudes leave the same way — no pandas object boxing on either
-    side of the heaviest crossing. Same K.* calls in the same order as
-    car_wavelet_op; pinned near-bitwise-equal in tests/test_spark_operators.py."""
-    if not abs_only and post_resample_rate is not None:
-        raise ValueError("Wavelet phase should not be resampled.")
-    if not abs_only:
-        # rejected EAGERLY at the driver — raising from inside the executor
-        # kernel would launch and compute the whole distributed job first
-        raise NotImplementedError(
-            "car_wavelet_arrow: phase output is kept on the pandas path; "
-            "use car_wavelet_op(abs_only=False)")
+    """Fused CAR -> wavelet in ONE Python crossing (applyInArrow): the CAR
+    gather already holds a whole series' channel block in one task, and
+    the wavelet is per-channel — a strict subset of that grouping — so
+    running it inside the same kernel saves a full Arrow round-trip of the
+    CAR'd signal plus one stage. Same K.* calls in the same order as
+    subtract_car_packed followed by wavelet_op.
+    Parity: the reference's own fused store_linenoise_notch_CAR stage
+    (pipelines.py:114-173) applied one stage later."""
     import pyarrow as pa
 
-    from ..dsp.filterbank import band_params, check_nyquist
-
-    cfs, sds = band_params(filters, hg_only)
-    check_nyquist(np.asarray(cfs), rate)
-    cfs_l, sds_l = [float(c) for c in cfs], [float(s) for s in sds]
-    n_bands = len(cfs_l)
+    build = _wavelet_band_kernel(rate, filters, hg_only, abs_only,
+                                 post_resample_rate, npad, precision)
 
     def fn(table: "pa.Table") -> "pa.Table":
-        ch = table.column("channel").to_numpy(zero_copy_only=False)
-        order = np.argsort(ch)
-        flat, bounds = _list_col_to_numpy(table.column("values"))
-        X = np.stack([flat[bounds[i]:bounds[i + 1]] for i in order], axis=1)
-        sid = table.column("series_id")[0].as_py()
+        sid, channels, X = _stack_series(table)
         Xc = np.asarray(K.subtract_car(X, mean_frac=mean_frac,
                                        precision=precision),
                         dtype=np.float64)
-        amps, out_ch = [], []
-        for i, p in enumerate(order):
-            for _b, amp, _phase in _wavelet_bands(
-                    Xc[:, i:i + 1], rate, filters, hg_only, True,
-                    post_resample_rate, npad, precision):
-                amps.append(np.ascontiguousarray(amp))
-                out_ch.append(int(ch[p]))
-        bands_flat = [b for _ in order for b in range(n_bands)]
-        # chunked table: each chunk's flattened amp length stays under the
-        # int32 list-offset ceiling (a long series x many bands can exceed
-        # it in one group even when every array is individually fine)
-        chunks = []
-        for lo, hi in _bounded_row_groups(amps):
-            n = hi - lo
-            chunks.append(pa.table({
-                "series_id": pa.array([sid] * n, type=pa.string()),
-                "channel": pa.array(out_ch[lo:hi], type=pa.int32()),
-                "band": pa.array(bands_flat[lo:hi], type=pa.int32()),
-                "cf": pa.array([cfs_l[b] for b in bands_flat[lo:hi]],
-                               type=pa.float64()),
-                "sd": pa.array([sds_l[b] for b in bands_flat[lo:hi]],
-                               type=pa.float64()),
-                "amp": _pack_list_array(amps[lo:hi]),
-                "phase": pa.nulls(n, type=pa.list_(pa.float64())),
-            }))
-        return pa.concat_tables(chunks)
+        return pa.Table.from_batches(list(build(sid, channels, Xc)))
 
     return df.groupBy("series_id").applyInArrow(fn, WAVELET_SCHEMA)

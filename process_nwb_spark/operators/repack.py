@@ -4,10 +4,9 @@ Long (canonical, relational): (series_id, channel, sample_idx, value)
 Packed (kernel carrier):      (series_id, channel, values ARRAY<DOUBLE>)
 
 Every spectral kernel needs a channel's full time axis in one task, so the
-engine packs once per kernel *stage group* (one shuffle), runs any number of
-fused kernels on the packed rows via narrow `mapInPandas` passes, and
-unpacks with `posexplode` (narrow). This keeps the default pipeline at 3
-repacking shuffles total (SURVEY.md §3/§7).
+engine packs once (one shuffle), runs the per-channel kernels on the packed
+rows via narrow `mapInArrow` passes, and unpacks with `posexplode`
+(narrow). The default pipeline packs exactly once (SURVEY.md §3/§7).
 
 Packing is pure Catalyst: collect_list of (sample_idx, value) structs +
 array_sort + transform — no Python crossing, stays in the JVM.
@@ -16,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .car import _nan_safe_value
 
 KEYS = ("series_id", "channel")
 
@@ -44,6 +45,10 @@ def pack(df: DataFrame, value_col: str = "value") -> DataFrame:
     threshold=1 (tests/test_spark_operators.py::
     test_pack_order_survives_sort_based_agg_fallback).
 
+    A NULL sample is collected as NaN: collect_list drops NULLs, which
+    would shorten the value list against the sample_idx list and shift
+    every later sample one slot earlier.
+
     An Arrow-native pack (mapInArrow over the sorted shuffle output,
     slicing contiguous key-runs with numpy) was built and measured
     STRICTLY worse — 2.6 s vs 0.8 s at 8 series x 32 ch x 320k samples —
@@ -55,7 +60,7 @@ def pack(df: DataFrame, value_col: str = "value") -> DataFrame:
         df.repartition(*KEYS)
         .sortWithinPartitions(*KEYS, "sample_idx")
         .groupBy(*KEYS)
-        .agg(F.collect_list(value_col).alias("_v"),
+        .agg(F.collect_list(_nan_safe_value(value_col)).alias("_v"),
              F.collect_list("sample_idx").alias("_i"))
     )
     n = F.size("_i")

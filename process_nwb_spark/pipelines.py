@@ -15,12 +15,12 @@ analog of the NWB processing module.
 
 Physical plan (2 shuffles on the packed layout — SURVEY.md §3, improved):
   pack (shuffle 1: long rows -> one array row per channel) ->
-  [resample+notch fused kernel, narrow] ->
-  packed CAR (shuffle 2: n_channels array rows per series — NOT the long
-  rows; the relational window CAR would shuffle n_time*n_channels rows) ->
-  wavelet kernel (narrow, fans out to bands) -> unpack -> relational tail.
-With `fuse=False` the original 3-shuffle relational-CAR plan runs instead
-(it materializes the long intermediates the `all_steps` catalog needs).
+  [resample+notch fused Arrow kernel, narrow] ->
+  packed CAR->wavelet Arrow kernel (shuffle 2: n_channels array rows per
+  series — NOT the long rows; the relational window CAR would shuffle
+  n_time*n_channels rows; fans out to bands) -> unpack -> relational tail.
+The lineage stages (downsampled, CAR_ln_downsampled) are lazy branches of
+the same plan and cost nothing unless materialized.
 """
 from __future__ import annotations
 
@@ -31,9 +31,8 @@ from pyspark.sql import functions as F
 
 from .dsp import kernels as K
 from .operators.car import subtract_car, subtract_car_packed
-from .operators.kernel_ops import (car_wavelet_arrow, car_wavelet_op,
-                                   fused_ops, fused_ops_arrow, notch_op,
-                                   resample_op, scale_packed, wavelet_op)
+from .operators.kernel_ops import (car_wavelet_arrow, fused_ops_arrow,
+                                   resample_op, scale_packed)
 from .operators.repack import pack, unpack
 from .operators.zscore import band_mean, high_gamma_packed, zscore_baseline
 
@@ -61,103 +60,74 @@ def preprocess(signals: DataFrame, rate: float,
                filters: str = "rat", hg_only: bool = True,
                mean_frac: float = 0.95, scaling: float = SCALING,
                abs_only: bool = True, precision: str = "single",
-               fuse: bool = True, arrow: bool = True,
-               segmented: bool = False, seg_len: int | None = None,
+               seg_len: int | None = None,
                seg_overlap: int = 4096) -> PreprocessResult:
     """The default pipeline on a long signals DataFrame
     (series_id, channel, sample_idx, value). Parity: pipelines.py:15-111.
 
-    `arrow=True` (default) runs the two kernel crossings — resample+notch
-    and CAR->wavelet — through the Arrow-native operators (mapInArrow /
-    applyInArrow): same math, same plan shape, but signal arrays cross as
-    flat float64 buffers + offsets instead of pandas object Series of
-    boxed per-row ndarrays, in both directions. Measured (8 series x 32 ch
-    x 10 s @ 3.2 kHz, interleaved min-of-5): 2.55 s pandas -> 2.11 s
-    arrow, bringing the pipeline to 1.34x the serial single-core NumPy
-    replay of the same workload. (An Arrow-native pack was also tried and
-    measured STRICTLY worse — 2.6 s vs 0.8 s for the JVM collect_list
-    pack — because it pays a full extra Python round-trip of the packed
-    arrays; the JVM pack stays regardless of `arrow`.) `arrow=False`
-    keeps the pandas operators — both paths are pinned near-bitwise-equal
-    (1e-12 at double; the FFT itself has 1-2 ULP run-to-run alignment
-    jitter, so exact bitwise across executions is unattainable) in
-    tests/test_spark_operators.py.
+    The two kernel crossings — resample+notch and CAR->wavelet — run
+    through the Arrow-native operators (mapInArrow / applyInArrow): signal
+    arrays cross as flat float64 buffers + offsets in both directions.
+    Measured (8 series x 32 ch x 10 s @ 3.2 kHz, interleaved min-of-5):
+    2.11 s, vs 2.55 s for the same plan with pandas crossings, and 1.34x
+    the serial single-core NumPy replay of the same workload. (An
+    Arrow-native pack was also tried and measured STRICTLY worse — 2.6 s
+    vs 0.8 s for the JVM collect_list pack — because it pays a full extra
+    Python round-trip of the packed arrays.)
 
-    `segmented=True` (or any explicit `seg_len`) routes the whole pipeline
-    through the overlap-segmented operators (operators/segmented.py): no
-    stage ever holds a full channel in one task, so a channel of 10^8+
-    samples processes in bounded memory — the escape hatch SCALE.md's
-    "Memory bound" section promises. Numerics are equivalent-but-not-
-    bitwise vs this whole-channel path (segment-local FFT grids);
-    boundary error is inside the reference's own chunked-vs-dense bound
-    (rtol=0.01, reference tests/test_pipeline.py:154), pinned e2e in
+    `stages` holds the reference's lineage intermediates (downsampled,
+    CAR_ln_downsampled, wvlt_amp, and wvlt_phase when abs_only=False) as
+    lazy branches of the one plan; `all_steps` writes them, and nothing
+    is computed for a stage that is never materialized.
+
+    An explicit `seg_len` routes the whole pipeline through the
+    overlap-segmented operators (operators/segmented.py): no stage ever
+    holds a full channel in one task, so a channel of 10^8+ samples
+    processes in bounded memory — the escape hatch SCALE.md's "Memory
+    bound" section promises. Numerics are equivalent-but-not-bitwise vs
+    this whole-channel path (segment-local FFT grids); boundary error is
+    inside the reference's own chunked-vs-dense bound (rtol=0.01,
+    reference tests/test_pipeline.py:154), pinned e2e in
     tests/test_pipeline.py. Requires abs_only=True (the final resample
     runs inside the pipeline, and resampled phase is meaningless — the
     same constraint the reference enforces, wavelet_transform.py:389).
+    The segmented plan produces only the CAR_ln_downsampled and wvlt_amp
+    stages.
     """
-    if segmented or seg_len is not None:
+    if seg_len is not None:
         if not abs_only:
             raise ValueError(
                 "segmented preprocess always post-resamples, which is "
                 "incompatible with phase output; use abs_only=True")
-        if not fuse:
-            # fuse=False exists to materialize the unfused 'downsampled'
-            # lineage stage, which the segmented plan never produces —
-            # failing loudly beats a downstream KeyError on res.stages
-            raise ValueError(
-                "segmented preprocess does not materialize the unfused "
-                "(fuse=False) lineage stages; run fuse=True, or run the "
-                "whole-channel path for --all_steps-style lineage")
-        # `arrow` is irrelevant here (the segment kernels are
-        # applyInPandas-grouped); accepted and ignored by design
         return _preprocess_segmented(
             signals, rate, initial_resample_rate, final_resample_rate,
             filters=filters, hg_only=hg_only, mean_frac=mean_frac,
             scaling=scaling, precision=precision, seg_len=seg_len,
             seg_overlap=seg_overlap)
-    stages: dict[str, DataFrame] = {}
 
-    use_arrow = arrow and fuse and abs_only
-    packed = pack(signals)
-    packed = scale_packed(packed, scaling)
-    if fuse:
-        kernel_map = fused_ops_arrow if use_arrow else fused_ops
-        ds = kernel_map(
-            packed,
-            lambda x: K.resample(x, initial_resample_rate, rate,
-                                 precision=precision),
-            lambda x: K.apply_linenoise_notch(x, initial_resample_rate,
-                                              precision=precision),
-        )
-        # dense CAR on packed rows: shuffle = n_channels array rows/series.
-        # The lineage stage stays separately addressable (lazy — only pays
-        # if materialized); the pipeline output itself uses the fused
-        # CAR->wavelet kernel below (one Python crossing for both).
-        repacked = subtract_car_packed(ds, mean_frac=mean_frac,
-                                       precision=precision)
-        stages["CAR_ln_downsampled"] = unpack(repacked)
-        car_wavelet = car_wavelet_arrow if use_arrow else car_wavelet_op
-        wv = car_wavelet(ds, initial_resample_rate, mean_frac=mean_frac,
-                         filters=filters, hg_only=hg_only,
-                         abs_only=abs_only,
-                         post_resample_rate=final_resample_rate,
-                         precision=precision)
-    else:
-        ds = resample_op(packed, initial_resample_rate, rate,
-                         precision=precision)
-        stages["downsampled"] = unpack(ds)
-        ds = notch_op(ds, initial_resample_rate, precision=precision)
-        long_ds = unpack(ds)
-        car_ln = subtract_car(long_ds, mean_frac=mean_frac)
-        stages["CAR_ln_downsampled"] = car_ln
-        repacked = pack(car_ln)
-        wv = wavelet_op(repacked, initial_resample_rate, filters=filters,
-                        hg_only=hg_only, abs_only=abs_only,
-                        post_resample_rate=final_resample_rate,
-                        precision=precision)
-    tf = unpack(wv.drop("phase"), values_col="amp", value_col="amp",
+    packed = scale_packed(pack(signals), scaling)
+    ds = fused_ops_arrow(
+        packed,
+        lambda x: K.resample(x, initial_resample_rate, rate,
+                             precision=precision),
+        lambda x: K.apply_linenoise_notch(x, initial_resample_rate,
+                                          precision=precision),
+    )
+    wv = car_wavelet_arrow(ds, initial_resample_rate, mean_frac=mean_frac,
+                           filters=filters, hg_only=hg_only,
+                           abs_only=abs_only,
+                           post_resample_rate=final_resample_rate,
+                           precision=precision)
+    amp_packed = wv.drop("phase")
+    tf = unpack(amp_packed, values_col="amp", value_col="amp",
                 extra_keys=("band", "cf", "sd"))
-    stages["wvlt_amp"] = tf
+    stages = {
+        "downsampled": unpack(resample_op(packed, initial_resample_rate,
+                                          rate, precision=precision)),
+        "CAR_ln_downsampled": unpack(subtract_car_packed(
+            ds, mean_frac=mean_frac, precision=precision)),
+        "wvlt_amp": tf,
+    }
     if not abs_only:
         # the reference stores phase as its own wvlt_phase_ series
         # (wavelet_transform.py:422-436); dropping it unconditionally
@@ -167,8 +137,7 @@ def preprocess(signals: DataFrame, rate: float,
             wv.drop("amp"), values_col="phase", value_col="phase",
             extra_keys=("band", "cf", "sd"))
     return PreprocessResult(tf=tf, stages=stages,
-                            tf_packed=wv if not abs_only
-                            else wv.drop("phase"))
+                            tf_packed=amp_packed if abs_only else wv)
 
 
 def _snap_seg_len(base: int, new_freq: float, old_freq: float) -> int:

@@ -282,8 +282,7 @@ def sig_segmented_parity(spark, sf_dir):
               precision="double")
     whole = preprocess(sig, 1000.0, **kw).tf.select(
         "channel", "band", "sample_idx", F.col("amp").alias("a"))
-    segd = preprocess(sig, 1000.0, segmented=True, seg_len=512, **kw
-                      ).tf.select(
+    segd = preprocess(sig, 1000.0, seg_len=512, **kw).tf.select(
         "channel", "band", "sample_idx", F.col("amp").alias("b"))
     j = whole.join(segd, ["channel", "band", "sample_idx"], "full_outer")
     pb = j.groupBy("band").agg(

@@ -40,15 +40,22 @@ def test_preprocess_matches_dense(spark, dense):
                                rtol=1e-7, atol=1e-9)
 
 
-def test_preprocess_unfused_matches_fused(spark, dense):
-    a = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
-                   precision="double", fuse=True).tf.toPandas()
-    b = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
-                   precision="double", fuse=False).tf.toPandas()
-    key = ["channel", "band", "sample_idx"]
-    a, b = a.sort_values(key), b.sort_values(key)
-    np.testing.assert_allclose(a.amp.to_numpy(), b.amp.to_numpy(),
-                               rtol=1e-9)
+def test_lineage_stages_match_dense(spark, dense):
+    """The lazy lineage branches of the one plan (what --all_steps
+    writes) match their dense prefixes: downsampled = scaled resample,
+    CAR_ln_downsampled = resample -> notch -> CAR."""
+    from process_nwb_spark.synth import long_to_dense
+
+    res = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL,
+                     precision="double")
+    Xr = K.resample(dense * 1e6, INIT, RATE, precision="double")
+    Xc = K.subtract_car(K.apply_linenoise_notch(Xr, INIT, precision="double"),
+                        0.95, precision="double")
+    for name, want in (("downsampled", Xr), ("CAR_ln_downsampled", Xc)):
+        got = long_to_dense(res.stages[name])
+        np.testing.assert_allclose(got, want, rtol=1e-9,
+                                   atol=1e-12 * np.abs(want).max(),
+                                   err_msg=name)
 
 
 def test_float32_default_within_reference_tolerance(spark, dense):
@@ -68,8 +75,8 @@ def test_float32_default_within_reference_tolerance(spark, dense):
 def test_materialize_lineage_names(spark, dense):
     res = preprocess(to_long_df(spark, dense), RATE, INIT, FINAL)
     names = res.materialize(spark, "ECoG")
-    assert "CAR_ln_downsampled_ECoG" in names
-    assert "wvlt_amp_ECoG" in names
+    assert names == ["CAR_ln_downsampled_ECoG", "downsampled_ECoG",
+                     "wvlt_amp_ECoG"]
     assert spark.table("wvlt_amp_ECoG").columns == res.tf.columns
 
 
@@ -238,7 +245,7 @@ def test_reference_worst_case_shapes(spark, post_resample_rate):
 
 
 def test_segmented_preprocess_e2e_matches_whole(spark):
-    """preprocess(segmented=True) vs the default whole-channel path,
+    """preprocess(seg_len=...) vs the default whole-channel path,
     end-to-end on the worst-case fixture shape — the lynchpin of the
     10^8-samples/channel claim (SCALE.md "Memory bound"): no stage of the
     segmented plan ever holds a full channel in one task.
@@ -270,7 +277,7 @@ def test_segmented_preprocess_e2e_matches_whole(spark):
          .tf.select(*key, "amp").toPandas().sort_values(key)
          .reset_index(drop=True))
     s = (preprocess(long_df, rate, init, final, precision="double",
-                    segmented=True, seg_len=32768)
+                    seg_len=32768)
          .tf.select(*key, "amp").toPandas().sort_values(key)
          .reset_index(drop=True))
     assert len(w) == len(s)
@@ -296,7 +303,7 @@ def test_segmented_preprocess_worst_case_ratio_composes(spark):
     requested seg_len composes with the default overlap."""
     X = generate_synthetic_data(2.0, 2, 12207.03125, seed=0)
     res = preprocess(to_long_df(spark, X), 12207.03125, 3200.0, 400.0,
-                     precision="double", segmented=True, seg_len=10000)
+                     precision="double", seg_len=10000)
     pdf = res.tf.groupBy("band").count().toPandas()
     assert len(pdf) == 6 and (pdf["count"] > 0).all()
 
@@ -307,7 +314,7 @@ def test_segmented_preprocess_rejects_phase(spark):
     X = generate_synthetic_data(0.5, 2, 2000.0, seed=0)
     with pytest.raises(ValueError, match="abs_only"):
         preprocess(to_long_df(spark, X), 2000.0, 1000.0, 500.0,
-                   abs_only=False, segmented=True)
+                   abs_only=False, seg_len=4096)
 
 
 def test_assemble_v2_keeps_zero_bigram_docs(spark):

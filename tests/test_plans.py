@@ -74,6 +74,24 @@ def test_pipeline_two_shuffles(spark):
     assert count_exchanges(res.tf) == 2, formatted_plan(res.tf, "simple")
 
 
+def test_pipeline_one_arrow_plan(spark):
+    """preprocess -> high_gamma_trace is one plan with 3 exchanges (pack,
+    the per-series CAR->wavelet group, the z-score tail) and exactly two
+    Python crossings, both Arrow: one mapInArrow (resample+notch) and one
+    applyInArrow (CAR->wavelet). No pandas carrier remains."""
+    from process_nwb_spark import high_gamma_trace, preprocess
+    from process_nwb_spark.synth import generate_synthetic_data, to_long_df
+
+    X = generate_synthetic_data(0.5, 4, 3200.0, seed=0)
+    hg = high_gamma_trace(preprocess(to_long_df(spark, X), 3200.0, 3200.0,
+                                     400.0))
+    plan = formatted_plan(hg, "simple")
+    assert count_exchanges(hg) == 3, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    assert "Pandas" not in plan, plan
+
+
 def test_stft_is_one_shuffle(spark):
     """The STFT plan: narrow frame-explode -> ONE shuffle on
     (series, channel, frame) -> per-frame kernel. No whole-channel state,

@@ -167,93 +167,87 @@ def test_electrodes_df(spark):
     assert (pdf.location == "cortex").all()
 
 
-def _rows_map(df, key_cols, val_col):
-    return {tuple(r[k] for k in key_cols): np.asarray(r[val_col])
-            for r in df.collect()}
+def test_pack_keeps_null_samples(spark):
+    """A NULL sample packs as NaN in its own slot: every channel keeps its
+    full length and no later sample shifts (collect_list drops NULLs)."""
+    from pyspark.sql import functions as F
+
+    X = generate_synthetic_data(0.5, 4, RATE, seed=1)   # 500 x 4
+    hole = (F.col("channel") == 1) & (F.col("sample_idx") == 3)
+    df = to_long_df(spark, X).withColumn(
+        "value", F.when(hole, F.lit(None)).otherwise(F.col("value")))
+    rows = {r["channel"]: np.asarray(r["values"], dtype=np.float64)
+            for r in pack(df).collect()}
+    assert [len(rows[c]) for c in range(4)] == [500] * 4
+    assert np.isnan(rows[1][3])
+    want = X.copy()
+    want[3, 1] = np.nan
+    np.testing.assert_array_equal(np.stack([rows[c] for c in range(4)], 1),
+                                  want)
 
 
-def _assert_rows_close(a, b, rtol=1e-12, atol=1e-13):
-    """Near-bitwise: the two sides run the IDENTICAL kernel code, but
-    pocketfft's SIMD path selection depends on heap-buffer alignment,
-    which varies between independent executions — measured 1-2 ULP
-    differences on a few hundred values per run, at double precision too.
-    1e-12 is ~4 orders above that jitter and ~12 below any semantic
-    difference."""
-    assert a.keys() == b.keys()
-    for k in a:
-        np.testing.assert_allclose(a[k], b[k], rtol=rtol, atol=atol,
-                                   err_msg=str(k))
+def test_fused_ops_arrow_matches_kernel(spark, signals, dense):
+    """resample+notch fused in one mapInArrow crossing == the dense
+    K.resample -> K.apply_linenoise_notch composition."""
+    from process_nwb_spark.operators.kernel_ops import fused_ops_arrow
+
+    ds = fused_ops_arrow(
+        scale_packed(pack(signals), 1e6),
+        lambda x: K.resample(x, 500.0, RATE, precision="double"),
+        lambda x: K.apply_linenoise_notch(x, 500.0, precision="double"))
+    got = long_to_dense(unpack(ds))
+    want = K.apply_linenoise_notch(
+        K.resample(dense * 1e6, 500.0, RATE, precision="double"), 500.0,
+        precision="double")
+    np.testing.assert_allclose(got, want, rtol=1e-10,
+                               atol=1e-12 * np.abs(want).max())
 
 
-def test_fused_ops_arrow_bitwise(spark, signals):
-    """Arrow crossing == pandas crossing, near-bitwise, for the fused
-    resample+notch kernel map (same fn over the same float64 views)."""
-    from process_nwb_spark.operators.kernel_ops import (fused_ops,
-                                                        fused_ops_arrow)
+def test_car_wavelet_arrow_matches_kernel(spark, signals, dense):
+    """applyInArrow CAR->wavelet == dense K.subtract_car ->
+    K.wavelet_transform: band amplitudes with the post-resample, and
+    phase (abs_only=False) without it."""
+    from process_nwb_spark.operators.kernel_ops import car_wavelet_arrow
 
-    pk = scale_packed(pack(signals), 1e6)
-    # precision="double": the float32 FFT is only 1-ULP repeatable across
-    # independent executions (alignment-dependent SIMD rounding), so the
-    # bitwise crossing-equivalence claim is made at double
-    fns = (lambda x: K.resample(x, 500.0, RATE, precision="double"),
-           lambda x: K.apply_linenoise_notch(x, 500.0, precision="double"))
-    a = _rows_map(fused_ops(pk, *fns), ("series_id", "channel"), "values")
-    b = _rows_map(fused_ops_arrow(pk, *fns), ("series_id", "channel"),
-                  "values")
-    _assert_rows_close(a, b)
+    Xc = K.subtract_car(dense, 0.95, precision="double")
+    Xh, _, cfs, sds = K.wavelet_transform(Xc, RATE, "rat", True,
+                                          precision="double")
+    kw = dict(mean_frac=0.95, filters="rat", hg_only=True,
+              precision="double")
+    amp = car_wavelet_arrow(pack(signals), RATE, abs_only=True,
+                            post_resample_rate=250.0, **kw).toPandas()
+    assert len(amp) == dense.shape[1] * len(cfs)
+    for _, row in amp.iterrows():
+        want = K.resample(np.abs(Xh[:, row.channel, row.band]), 250.0, RATE,
+                          precision="double")
+        np.testing.assert_allclose(np.asarray(row.amp), want, rtol=1e-9,
+                                   atol=1e-12)
+        assert row.phase is None
+        assert np.isclose(row.cf, cfs[row.band])
+        assert np.isclose(row.sd, sds[row.band])
 
-
-def test_car_wavelet_arrow_bitwise(spark, signals):
-    """applyInArrow CAR->wavelet == applyInPandas twin, near-bitwise, incl.
-    the post-resample of band amplitudes and the null phase column."""
-    from process_nwb_spark.operators.kernel_ops import (car_wavelet_arrow,
-                                                        car_wavelet_op)
-
-    pk = scale_packed(pack(signals), 1e6)
-    kw = dict(mean_frac=0.95, filters="rat", hg_only=True, abs_only=True,
-              post_resample_rate=250.0, precision="double")
-    keys = ("series_id", "channel", "band")
-    a = _rows_map(car_wavelet_op(pk, RATE, **kw), keys, "amp")
-    b = _rows_map(car_wavelet_arrow(pk, RATE, **kw), keys, "amp")
-    _assert_rows_close(a, b)
-    cfs = {tuple(r[k] for k in keys): (r["cf"], r["sd"], r["phase"])
-           for r in car_wavelet_arrow(pk, RATE, **kw).collect()}
-    for _, (cf, sd, phase) in cfs.items():
-        assert cf > 0 and sd > 0 and phase is None
+    ph = car_wavelet_arrow(pack(signals), RATE, abs_only=False,
+                           **kw).toPandas()
+    assert len(ph) == dense.shape[1] * len(cfs)
+    for _, row in ph.iterrows():
+        want = Xh[:, row.channel, row.band]
+        np.testing.assert_allclose(np.asarray(row.amp), np.abs(want),
+                                   rtol=1e-9, atol=1e-12)
+        np.testing.assert_allclose(np.asarray(row.phase), np.angle(want),
+                                   rtol=1e-9, atol=1e-9)
 
 
-def test_preprocess_arrow_matches_pandas_bitwise(spark, dense):
-    """End-to-end: preprocess(arrow=True) == preprocess(arrow=False),
-    near-bitwise (1e-12 at double, 1e-5 at single).
+def test_subtract_car_packed_matches_kernel(spark, dense):
+    """Packed applyInArrow CAR == K.subtract_car, with an all-NaN channel
+    and one NaN sample (NaNs count toward n_channels and are skipped by
+    the mean, like np.sort + nanmean)."""
+    from process_nwb_spark.operators.car import subtract_car_packed
 
-    No two independent executions — pandas vs pandas included — can
-    promise exact bitwise equality: pocketfft's SIMD kernel choice
-    depends on heap-buffer alignment, which varies run-to-run, giving
-    1-2 ULP jitter (2^-7 absolute on O(1e3) float32 values; a few
-    hundred 1-ULP float64 values per run at double). The band fold in
-    high_gamma_packed is sorted by band, so summation order is pinned
-    and contributes no extra noise."""
-    from process_nwb_spark import high_gamma_trace, preprocess
-
-    df = to_long_df(spark, dense)
-
-    def run(arrow, precision):
-        res = preprocess(df, RATE, initial_resample_rate=500.0,
-                         final_resample_rate=250.0, filters="rat",
-                         hg_only=True, arrow=arrow, precision=precision)
-        hg = high_gamma_trace(res, 0.25, 250.0)
-        vcol = [c for c in hg.columns
-                if c not in ("series_id", "channel", "sample_idx")][0]
-        return {(r["series_id"], r["channel"], r["sample_idx"]): r[vcol]
-                for r in hg.collect()}
-
-    a, b = run(True, "double"), run(False, "double")
-    assert a.keys() == b.keys()
-    av = np.array([a[k] for k in sorted(a)])
-    bv = np.array([b[k] for k in sorted(a)])
-    np.testing.assert_allclose(av, bv, rtol=1e-12, atol=1e-13)
-
-    a, b = run(True, "single"), run(False, "single")
-    av = np.array([a[k] for k in sorted(a)])
-    bv = np.array([b[k] for k in sorted(a)])
-    np.testing.assert_allclose(av, bv, rtol=1e-5, atol=1e-6)
+    X = dense.copy()
+    X[:, 2] = np.nan
+    X[10, 4] = np.nan
+    got = long_to_dense(unpack(subtract_car_packed(
+        pack(to_long_df(spark, X)), mean_frac=0.95, precision="double")))
+    want = K.subtract_car(X, 0.95, precision="double")
+    assert np.isnan(got[:, 2]).all() and np.isnan(got[10, 4])
+    np.testing.assert_allclose(got, want, rtol=1e-10, atol=1e-12)
